@@ -62,30 +62,31 @@ object Pipeline {
 
       val chunked = chunker.chunk(changed, "content")
       val embedded = embedder.embed(chunked, "chunk")
+      // Persisted: the sink write and the bookkeeping below read the same
+      // rows, and chunk/embed run once.
       val projected = Sink.project(embedded, textCol = "chunk", vecCol = "embedding")
         .drop("content") // the chunk is the sink text; full doc content is not re-stored
-      sink.write(projected)
-      // Post-write bookkeeping reads the WRITTEN table back instead of
-      // re-running the chunk/embed lineage: a source appears in the sink
-      // after an upsert restricted to this run's sources iff it produced
-      // >= 1 chunk this run.
-      val written = sink.read(spark)
-      val changedSources = changed.select("source").distinct()
-      val writtenChanged = written.join(changedSources, Seq("source"), "left_semi")
-      val nChunks = writtenChanged.count()
-      val processedSources = writtenChanged.select("source").distinct()
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        sink.write(projected)
+        // Post-write bookkeeping reads the written batch, not the sink: no
+        // listing or read-back of the table. A source produced >= 1 chunk
+        // this run iff it is in the batch; one aggregate gives both counts.
+        val counts = projected.agg(count(lit(1)), countDistinct(col("source"))).first()
+        val (nChunks, nProcessed) = (counts.getLong(0), counts.getLong(1))
+        val processedSources = projected.select("source").distinct()
 
-      // State update AFTER the successful write, keyed by the sources that
-      // produced chunks.
-      val processedFps = changed
-        .join(processedSources, Seq("source"), "left_semi")
-        .select(col("source").as("item_id"), col("fingerprint"))
-        .filter(col("fingerprint").isNotNull)
-      val nProcessed = processedSources.count()
-      val newState = StateStore.touchWatermark(StateStore.upsert(state, processedFps))
-      stateManager.save(newState)
+        // State update AFTER the successful write, keyed by the sources that
+        // produced chunks.
+        val processedFps = changed
+          .join(processedSources, Seq("source"), "left_semi")
+          .select(col("source").as("item_id"), col("fingerprint"))
+          .filter(col("fingerprint").isNotNull)
+        val newState = StateStore.touchWatermark(StateStore.upsert(state, processedFps))
+        stateManager.save(newState)
 
-      RunReport(nDocs, nChanged, nChunks, nProcessed)
+        RunReport(nDocs, nChanged, nChunks, nProcessed)
+      } finally projected.unpersist()
     } finally changed.unpersist()
   }
 }

@@ -12,8 +12,9 @@ object Verify {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      // Small-input/heavy-compute queries: don't let AQE coalesce shuffle
-      // partitions below cluster parallelism (tiny bytes != tiny work).
+      // AQE coalesce floor: 64k lets metadata-sized exchanges (audit
+      // summaries, count fences) narrow while data-sized ones keep full
+      // width; Bench.scala's session states the full rationale (r17).
       .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
         sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION_SIZE", "64k")) // mirror Bench (r17)
       .getOrCreate()

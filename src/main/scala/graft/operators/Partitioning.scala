@@ -27,8 +27,8 @@ object Partitioning {
     * pattern for planning-bound trees). Arms must be independent and
     * their results small (they are collected onto executor block storage
     * whole); per-arm plans and values are exactly the lazy union's.
-    */
-  /** CONTRACT (r17): arms must not mutate session state — in particular
+    *
+    * CONTRACT (r17): arms must not mutate session state — in particular
     * [[withShuffleWidth]]-style `spark.sql.shuffle.partitions` edits —
     * because overlapped arms would race on the shared conf; an arm that
     * needs a width override must set it per-plan (repartition(n, ...)),

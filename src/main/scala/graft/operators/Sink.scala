@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Vector-store sinks re-expressed as partitioned parquet tables with
   * delete-by-source upsert semantics.
@@ -39,9 +40,11 @@ object Sink {
   private[graft] def lockFor(path: String): Object =
     pathLocks.computeIfAbsent(path, _ => new Object)
 
-  /** Reap leftover survivor-staging dirs from crashed upserts: the UUID
-    * names make them unidentifiable to their (dead) writer, so any
-    * `<table>.survivors-*` whose LAST WRITE is older than the reap age is
+  /** Reap leftover staging dirs from crashed writes: the UUID names make
+    * them unidentifiable to their (dead) writer, so any
+    * `<table>.migrate-*` / `<table>.old-*` (schema migrations) or
+    * `<table>.survivors-*` (left by upserts of earlier versions, which
+    * staged survivors) whose LAST WRITE is older than the reap age is
     * treated as garbage. Staleness is judged by the newest mtime found in a
     * bounded-depth recursive scan of the dir, not the dir's creation time —
     * an in-flight Spark write lands task output nested under
@@ -61,9 +64,8 @@ object Sink {
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val parent = p.getParent
     if (parent != null && fs.exists(parent)) {
-      // survivors- from upserts; migrate-/old- from schema migrations
-      // (full-table-sized — a kill -9 between write and promote would
-      // otherwise leak 1-2x the table size permanently).
+      // migrate-/old- are full-table-sized: a kill -9 between write and
+      // promote would otherwise leak 1-2x the table size permanently.
       val prefixes = Seq(".survivors-", ".migrate-", ".old-").map(p.getName + _)
       val cutoff = System.currentTimeMillis() - maxAgeMs
       // Depth 5 reaches <staging>/_temporary/<job>/_temporary/<task>/part-…
@@ -100,62 +102,151 @@ object Sink {
         col(sourceCol).as("source")) ++ metaCols: _*)
   }
 
+  /** The bucket of a source: `pmod(hash(source), numBuckets)`. A table
+    * constant — every writer of one table must use the same `numBuckets`.
+    */
+  private def bucketOf(source: Column, numBuckets: Int): Column =
+    pmod(hash(source), lit(numBuckets))
+
   /** Upsert `df` into the table at `path`: source buckets present in `df`
     * are overwritten, everything else is untouched. This is the scale-safe
     * version of the reference's delete-by-source + append (`sinks.py:66-93`).
     *
+    * Per-run cost is proportional to the buckets the batch touches, not to
+    * the table: the batch is pinned (persisted unless the caller already
+    * did) and its touched buckets collected; then ONE read of exactly the
+    * existing `source_bucket=k` directories of those buckets (with
+    * `basePath`, so no listing of the other bucket directories) serves the
+    * schema check and the survivors. Whether the table exists is decided
+    * from the filesystem, so a table that exists but cannot be read makes
+    * the upsert fail instead of being taken for absent — overwriting its
+    * touched buckets with the batch alone would drop their survivors.
+    *
     * Bucket-collision safety: overwriting a bucket must not drop UNCHANGED
-    * sources that merely hash into it. Survivors — rows in affected buckets
-    * whose source is not in the incoming batch — are read back (a
-    * partition-PRUNED scan of only the affected buckets, never the whole
-    * table) and carried through the rewrite. They are staged to a temp dir
-    * first because Spark cannot overwrite a path it is simultaneously
-    * reading; survivor volume is bounded by the collision rate, not table
-    * size.
+    * sources that merely hash into it. Survivors — rows in touched buckets
+    * whose source is not in the batch — are carried through the rewrite
+    * straight from the table's own files, with no staging copy: dynamic
+    * partition overwrite writes to a job staging directory and replaces the
+    * touched bucket directories only at job commit, after every task that
+    * reads them has finished. Each rewritten bucket is written as ONE file.
+    *
+    * Schema: the existing schema is compared with the batch's modulo
+    * nullability ([[graft.sinks.SinkSchemas.compatible]]); only a real type
+    * or column change takes the full-table migration.
     */
   def upsertBySource(df: DataFrame, path: String, sourceCol: String = "source",
                      numBuckets: Int = DefaultBuckets): Unit = lockFor(path).synchronized {
     val spark = df.sparkSession
     reapStaleStaging(spark, path)
-    val withBucket = df.withColumn("source_bucket",
-      pmod(hash(col(sourceCol)), lit(numBuckets)))
-    val existing =
-      try Some(spark.read.parquet(path)) catch { case _: Exception => None }
-    val toWrite = existing match {
-      case Some(old) =>
-        val incomingBuckets = withBucket.select("source_bucket").distinct()
-        val incomingSources = df.select(col(sourceCol).as("__in_src")).distinct()
-        val survivors = old
-          .join(broadcast(incomingBuckets), Seq("source_bucket"), "left_semi")
-          .join(broadcast(incomingSources),
-            col(sourceCol) === col("__in_src"), "left_anti")
-        if (survivors.isEmpty) (withBucket, None)
-        else {
-          // Unique staging dir per invocation: a fixed path would let two
-          // concurrent upserts to the same table overwrite each other's
-          // staged survivors or delete a dir the other is still reading.
-          val tmp = path + ".survivors-" + java.util.UUID.randomUUID().toString
-          survivors.write.mode("overwrite").parquet(tmp)
-          (withBucket.unionByName(spark.read.parquet(tmp)), Some(tmp))
-        }
-      case None => (withBucket, None)
-    }
-    val (out, staging) = toWrite
-    // try/finally: a failed overwrite must not leak its staging dir (the
-    // UUID name would make it unreapable by anything but the age-based
-    // sweep above).
+    // Pinned: the touched-bucket collect and the write must see the same
+    // rows (a batch row in a bucket the survivors read never loaded would
+    // replace that bucket without its survivors), and the upstream lineage
+    // (chunk + embed) then runs once.
+    val owned = df.storageLevel == StorageLevel.NONE
+    val batch = if (owned) df.persist(StorageLevel.MEMORY_AND_DISK) else df
     try {
-      out.write
-        .partitionBy("source_bucket")
-        .option("partitionOverwriteMode", "dynamic")
-        .mode("overwrite")
-        .parquet(path)
-    } finally {
-      staging.foreach { tmp =>
-        val fs = new org.apache.hadoop.fs.Path(tmp)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
+      val withBucket = batch.withColumn("source_bucket", bucketOf(col(sourceCol), numBuckets))
+      touchedRows(spark, path, withBucket) match {
+        case None => writeBuckets(withBucket, path)
+        case Some(old) if !graft.sinks.SinkSchemas.compatible(
+            old.drop("source_bucket").schema, batch.schema) =>
+          migrate(batch, path, sourceCol, numBuckets)
+        case Some(old) =>
+          val incomingSources = batch.select(col(sourceCol).as("__in_src")).distinct()
+          val survivors = old.join(broadcast(incomingSources),
+            col(sourceCol) === col("__in_src"), "left_anti")
+          writeBuckets(withBucket.unionByName(survivors), path)
       }
+    } finally if (owned) batch.unpersist()
+  }
+
+  /** The existing rows of the buckets `withBucket` touches, read from
+    * those bucket directories only; None when there is no table or it holds
+    * no bucket yet. When none of the touched buckets exists yet, one other
+    * bucket directory is read for its schema and filtered empty. A path
+    * holding anything but bucket directories is not taken for an empty
+    * table: writing buckets into it would mix two layouts.
+    */
+  private def touchedRows(spark: SparkSession, path: String,
+                          withBucket: DataFrame): Option[DataFrame] = {
+    val table = new org.apache.hadoop.fs.Path(path)
+    val fs = table.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(table)) None
+    else {
+      val (buckets, other) = fs.listStatus(table).toSeq
+        .filterNot(st => st.getPath.getName.startsWith("_") || st.getPath.getName.startsWith("."))
+        .partition(st => st.isDirectory && st.getPath.getName.startsWith("source_bucket="))
+      require(other.isEmpty, s"graft.Sink.upsertBySource: $path is not a bucketed sink table " +
+        s"(found '${other.headOption.map(_.getPath.getName).getOrElse("")}')")
+      val existing = buckets.map(_.getPath).sortBy(_.getName)
+      if (existing.isEmpty) None
+      else {
+        // Bounded by numBuckets, so the collect is driver-safe.
+        val touched = withBucket.select("source_bucket").distinct()
+          .collect().map(_.getInt(0)).toSet
+        val dirs = existing.filter(p => touched(p.getName.stripPrefix("source_bucket=").toInt))
+        val read = if (dirs.nonEmpty) dirs else existing.take(1)
+        Some(spark.read.option("basePath", path).parquet(read.map(_.toString): _*)
+          .filter(col("source_bucket").isin(touched.toSeq: _*)))
+      }
+    }
+  }
+
+  /** Dynamic-overwrite the bucket directories present in `out`, one file
+    * per bucket.
+    */
+  private def writeBuckets(out: DataFrame, path: String): Unit =
+    out.repartition(col("source_bucket")).write
+      .partitionBy("source_bucket")
+      .option("partitionOverwriteMode", "dynamic")
+      .mode("overwrite")
+      .parquet(path)
+
+  /** Schema migration (`sinks.py:40-48`), the path for a real type or
+    * column change only: the WHOLE table is rewritten under the merged
+    * schema — old rows of sources not in `df` carried with missing columns
+    * nulled — into a staging directory, then swapped in atomically.
+    */
+  private def migrate(df: DataFrame, path: String, sourceCol: String,
+                      numBuckets: Int): Unit = {
+    val spark = df.sparkSession
+    val oldData = spark.read.parquet(path).drop("source_bucket")
+    val merged = df.unionByName(oldData
+        .join(df.select(sourceCol).distinct(), Seq(sourceCol), "left_anti"),
+      allowMissingColumns = true)
+    // Unique staging dir (concurrent migrations must not clobber each
+    // other), and move-old-aside-then-promote instead of
+    // delete-then-rename so readers never observe a missing table:
+    // the table path is absent only between two metadata-level renames,
+    // not for the duration of a recursive delete.
+    val runId = java.util.UUID.randomUUID().toString
+    val tmp = path + ".migrate-" + runId
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val pathP = new org.apache.hadoop.fs.Path(path)
+    val tmpP = new org.apache.hadoop.fs.Path(tmp)
+    val oldAside = new org.apache.hadoop.fs.Path(path + ".old-" + runId)
+    // Hadoop rename signals failure by RETURNING FALSE (and renaming
+    // onto an existing dir nests the source inside it) — every rename
+    // result is checked so a failed step can't silently "succeed" with
+    // stale data. On a failed promote the old table is restored.
+    var promoted = false
+    try {
+      writeBuckets(merged.withColumn("source_bucket", bucketOf(col(sourceCol), numBuckets)), tmp)
+      require(fs.rename(pathP, oldAside),
+        s"sink migration: rename $pathP -> $oldAside failed")
+      try {
+        require(fs.rename(tmpP, pathP),
+          s"sink migration: rename $tmpP -> $pathP failed")
+        promoted = true
+      } catch {
+        case e: Throwable =>
+          fs.rename(oldAside, pathP) // best-effort restore of the old table
+          throw e
+      }
+      fs.delete(oldAside, true)
+    } finally {
+      if (!promoted) fs.delete(tmpP, true)
     }
   }
 

@@ -402,11 +402,12 @@ object StateStore {
         .collect().map(_.getInt(0)).toSeq
       adviseDensity("upsertBucketed", path, touched.length, numBuckets)
       if (touched.nonEmpty) {
-        // Surviving rows of the touched buckets are STAGED to a scratch
-        // dir and re-read before the overwrite — Spark (rightly) refuses
-        // to overwrite a path it is still reading from, and the staging
-        // round trip is bounded by the touched buckets, not the table
-        // (the Sink.upsertBySource discipline).
+        // Surviving rows of the touched buckets are carried through the
+        // rewrite straight from the table's own files, with no staging
+        // copy (the Sink.upsertBySource discipline): dynamic partition
+        // overwrite writes to a job staging directory and replaces the
+        // touched bucket directories only at job commit, after every task
+        // reading them has finished.
         //
         // Bootstrap is decided by an EXPLICIT existence check, not a
         // broad catch: a transient read failure on an existing table must
@@ -437,25 +438,10 @@ object StateStore {
             .join(newRows.select("item_id"), Seq("item_id"), "left_anti")
             .select(col("item_id"), col("fingerprint"), col("updated_at"),
               col("bucket")))
-        val (out, staging) = survivors match {
-          case Some(s) if !s.isEmpty =>
-            val tmp = path + ".survivors-" +
-              java.util.UUID.randomUUID().toString
-            s.write.mode("overwrite").parquet(tmp)
-            (newRows.unionByName(spark.read.parquet(tmp)), Some(tmp))
-          case _ => (newRows, None)
-        }
-        try {
-          out.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket").parquet(path)
-        } finally {
-          staging.foreach { tmp =>
-            val fs = new org.apache.hadoop.fs.Path(tmp)
-              .getFileSystem(spark.sparkContext.hadoopConfiguration)
-            fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-          }
-        }
+        survivors.fold(newRows)(newRows.unionByName(_))
+          .write.mode("overwrite")
+          .option("partitionOverwriteMode", "dynamic")
+          .partitionBy("bucket").parquet(path)
       }
     }
 

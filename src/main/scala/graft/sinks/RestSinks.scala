@@ -36,9 +36,11 @@ final case class ChromaRestSink(baseUrl: String, collection: String,
     // upstream (sampling, uuid, repartition+limit) could pass the null
     // guard in job 1 yet produce different rows in job 2 — reopening the
     // delete-then-NPE data-loss window the guard exists to close.
-    val pinned = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // A frame the caller already persisted is used as is and left cached.
+    val owned = df.storageLevel == org.apache.spark.storage.StorageLevel.NONE
+    val pinned = if (owned) df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) else df
     try writePinned(pinned)
-    finally pinned.unpersist(blocking = false)
+    finally if (owned) pinned.unpersist(blocking = false)
   }
 
   private def writePinned(df: DataFrame): Unit = {

@@ -51,79 +51,42 @@ object SinkSchemas {
     }
   }
 
-  /** Schemas compatible = same names+types modulo nullability and column
-    * order (first-observed-type-wins in the reference collapses to: the
-    * DataFrame's own schema is the inferred schema).
+  /** Schemas compatible = same names+types modulo column order and
+    * nullability at every nesting level — array elements, map values and
+    * struct fields (first-observed-type-wins in the reference collapses to:
+    * the DataFrame's own schema is the inferred schema). Parquet reads every
+    * nested type back as nullable, so a batch declaring `vector` as
+    * `array<float>` without nulls (the embedders do) is compatible with the
+    * table it was written into.
     */
   def compatible(a: StructType, b: StructType): Boolean = {
-    def norm(s: StructType) = s.fields.map(f => (f.name, f.dataType)).sortBy(_._1).toSeq
+    def nullable(t: DataType): DataType = t match {
+      case ArrayType(e, _) => ArrayType(nullable(e), containsNull = true)
+      case MapType(k, v, _) => MapType(nullable(k), nullable(v), valueContainsNull = true)
+      case StructType(fs) => StructType(fs.map(f => StructField(f.name, nullable(f.dataType))))
+      case other => other
+    }
+    def norm(s: StructType) = s.fields.map(f => (f.name, nullable(f.dataType))).sortBy(_._1).toSeq
     norm(a) == norm(b)
   }
 }
 
 /** K1 — table sink with the `text + vector + metadata` projection and
   * delete-by-source upsert (the reference's LanceDB sink).
+  *
+  * A write costs what the batch touches ([[Sink.upsertBySource]]): it reads
+  * and rewrites only the `source_bucket=k` directories of the batch's
+  * sources — each rewritten bucket as one file, survivors carried from the
+  * table's own files without a staging copy — and compares schemas modulo
+  * nullability, so only a real type or column change takes the full-table
+  * migration.
   */
 final case class VectorTableSink(path: String, numBuckets: Int = Sink.DefaultBuckets)
     extends GraftSink {
 
-  // Whole-write serialization per table path (reentrant with the inner
-  // upsert's lock): concurrent in-JVM writers see each other's completed
-  // writes, never a half-migrated table.
-  override def write(df: DataFrame): Unit = Sink.lockFor(path).synchronized {
+  override def write(df: DataFrame): Unit = {
     SinkSchemas.validate(df.schema)
-    val spark = df.sparkSession
-    val existing = try Some(spark.read.parquet(path)) catch { case _: Exception => None }
-    existing match {
-      case Some(old)
-          if !SinkSchemas.compatible(
-            old.drop("source_bucket").schema, df.schema) =>
-        // Schema migration: rewrite old rows under the merged schema with
-        // missing columns nulled (`sinks.py:40-48`), atomically.
-        val oldData = old.drop("source_bucket")
-        val merged = df.unionByName(oldData
-            .join(df.select("source").distinct(), Seq("source"), "left_anti"),
-          allowMissingColumns = true)
-        // Unique staging dir (concurrent migrations must not clobber each
-        // other), and move-old-aside-then-promote instead of
-        // delete-then-rename so readers never observe a missing table:
-        // the table path is absent only between two metadata-level renames,
-        // not for the duration of a recursive delete.
-        val runId = java.util.UUID.randomUUID().toString
-        val tmp = path + ".migrate-" + runId
-        val fs = new org.apache.hadoop.fs.Path(path)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val pathP = new org.apache.hadoop.fs.Path(path)
-        val tmpP = new org.apache.hadoop.fs.Path(tmp)
-        val oldAside = new org.apache.hadoop.fs.Path(path + ".old-" + runId)
-        // Hadoop rename signals failure by RETURNING FALSE (and renaming
-        // onto an existing dir nests the source inside it) — every rename
-        // result is checked so a failed step can't silently "succeed" with
-        // stale data. On a failed promote the old table is restored.
-        var promoted = false
-        try {
-          merged.withColumn("source_bucket", pmod(hash(col("source")), lit(numBuckets)))
-            .write.partitionBy("source_bucket").mode("overwrite").parquet(tmp)
-          Sink.lockFor(path).synchronized {
-            require(fs.rename(pathP, oldAside),
-              s"sink migration: rename $pathP -> $oldAside failed")
-            try {
-              require(fs.rename(tmpP, pathP),
-                s"sink migration: rename $tmpP -> $pathP failed")
-              promoted = true
-            } catch {
-              case e: Throwable =>
-                fs.rename(oldAside, pathP) // best-effort restore of the old table
-                throw e
-            }
-          }
-          fs.delete(oldAside, true)
-        } finally {
-          if (!promoted) fs.delete(tmpP, true)
-        }
-      case _ =>
-        Sink.upsertBySource(df, path, numBuckets = numBuckets)
-    }
+    Sink.upsertBySource(df, path, numBuckets = numBuckets)
   }
 
   override def read(spark: SparkSession): DataFrame =

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -126,6 +128,113 @@ class SinksSpec extends AnyFunSuite with SparkTestBase {
     assert(out.columns.toSet == Set("text", "vector", "source", "lang"))
     val rows = out.select("text", "lang").as[(String, String)].collect().toMap
     assert(rows == Map("old" -> null, "new" -> "en"))
+  }
+
+  test("schema compatibility ignores nullability at every nesting level, not real changes") {
+    import org.apache.spark.sql.types._
+    import graft.sinks.SinkSchemas.compatible
+    def schema(vec: DataType, meta: DataType, nested: DataType) = StructType(Seq(
+      StructField("text", StringType, nullable = false),
+      StructField("vector", vec),
+      StructField("tags", meta),
+      StructField("doc", nested)))
+    def fields(nullable: Boolean) = StructType(Seq(
+      StructField("title", StringType, nullable),
+      StructField("pages", ArrayType(LongType, containsNull = nullable), nullable)))
+    val declared = schema(ArrayType(FloatType, containsNull = false),
+      MapType(StringType, ArrayType(StringType, containsNull = false), valueContainsNull = false),
+      fields(nullable = false))
+    // What parquet reads back: every nested type nullable.
+    val readBack = schema(ArrayType(FloatType, containsNull = true),
+      MapType(StringType, ArrayType(StringType, containsNull = true), valueContainsNull = true),
+      fields(nullable = true))
+    assert(compatible(declared, readBack))
+    assert(compatible(readBack, declared))
+    assert(compatible(declared, StructType(declared.fields.reverse)), "column order must not matter")
+    // Real changes stay incompatible.
+    assert(!compatible(declared, declared.add("lang", StringType)))
+    assert(!compatible(declared, StructType(declared.fields.map(f =>
+      if (f.name == "vector") f.copy(dataType = ArrayType(DoubleType, containsNull = false)) else f))))
+    assert(!compatible(declared, schema(ArrayType(FloatType, containsNull = false),
+      MapType(StringType, ArrayType(StringType, containsNull = false), valueContainsNull = false),
+      fields(nullable = false).add("year", IntegerType))))
+  }
+
+  test("an upsert rewrites only the touched buckets of an embedder-shaped table, never migrating") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val base = tempDir("graft-sink-buckets")
+    val dir = base.resolve("t").toString
+    // The embedders declare the vector non-null; parquet reads it back
+    // nullable, which must not count as a schema change.
+    val schema = StructType(Seq(
+      StructField("text", StringType),
+      StructField("vector", ArrayType(FloatType, containsNull = false)),
+      StructField("source", StringType)))
+    def batch(sources: Seq[Int], version: String) = spark.createDataFrame(
+      (for (s <- sources; i <- 0 until 3)
+        yield Row(s"$version-$s-$i", Seq(s.toFloat, i.toFloat), s"src_$s")).asJava,
+      schema)
+    val sink = VectorTableSink(dir)
+    sink.write(batch(0 until 600, "v1"))
+
+    def bucketFiles(): Map[String, Seq[(String, Int, Long)]] =
+      new java.io.File(dir).listFiles()
+        .filter(f => f.isDirectory && f.getName.startsWith("source_bucket="))
+        .map(d => d.getName -> d.listFiles().filter(_.getName.endsWith(".parquet"))
+          .sortBy(_.getName)
+          .map(f => (f.getName, java.util.Arrays.hashCode(
+            java.nio.file.Files.readAllBytes(f.toPath)), f.lastModified())).toSeq)
+        .toMap
+    val before = bucketFiles()
+    assert(before.size == 64, s"fixture should fill every bucket: ${before.size}")
+
+    // Any `<table>.migrate-*` / `<table>.old-*` directory means a full rewrite.
+    val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    @volatile var watching = true
+    val watcher = new Thread(() => while (watching) {
+      Option(base.toFile.list()).foreach(_.foreach(seen.add))
+      Thread.sleep(2)
+    })
+    watcher.start()
+    val edited = Seq(7, 42, 133)
+    try sink.write(batch(edited, "v2"))
+    finally { watching = false; watcher.join() }
+    assert(!seen.asScala.exists(n => n.startsWith("t.migrate-") || n.startsWith("t.old-")),
+      s"the upsert migrated the table: $seen")
+
+    val touched = batch(edited, "v2")
+      .select(pmod(hash(col("source")), lit(64)).as("b")).distinct()
+      .collect().map(r => s"source_bucket=${r.getInt(0)}").toSet
+    val after = bucketFiles()
+    assert(after.keySet == before.keySet)
+    before.foreach { case (b, files) =>
+      if (touched(b)) assert(after(b).size == 1, s"rewritten bucket $b is not one file: ${after(b)}")
+      else assert(after(b) == files, s"untouched bucket $b was rewritten")
+    }
+    val out = sink.read(spark).select("text", "source").as[(String, String)].collect()
+    assert(out.length == 1800)
+    assert(out.toSet == (0 until 600).flatMap { s =>
+      val v = if (edited.contains(s)) "v2" else "v1"
+      (0 until 3).map(i => (s"$v-$s-$i", s"src_$s"))
+    }.toSet)
+  }
+
+  test("an unreadable existing sink fails the upsert instead of being taken for absent") {
+    val dir = tempDir("graft-sink").resolve("corrupt").toString
+    val sink = VectorTableSink(dir, numBuckets = 4)
+    sink.write(frame((0 until 20).map(i => (s"t$i", Seq(i.toFloat), s"src_$i"))))
+    val parts = java.nio.file.Files.walk(java.nio.file.Paths.get(dir)).iterator().asScala
+      .filter(_.getFileName.toString.endsWith(".parquet")).toVector
+    parts.foreach(p => java.nio.file.Files.write(p, "not parquet".getBytes))
+    intercept[Exception](sink.write(frame(Seq(("new", Seq(1f), "src_3")))))
+    // Nothing was overwritten: every (corrupt) file is still in place.
+    parts.foreach(p => assert(new String(java.nio.file.Files.readAllBytes(p)) == "not parquet", p))
+    // A path holding a table of another layout is not an empty sink either.
+    val flat = tempDir("graft-sink").resolve("flat").toString
+    frame(Seq(("old", Seq(1f), "src_old"))).write.parquet(flat)
+    intercept[IllegalArgumentException](
+      VectorTableSink(flat).write(frame(Seq(("new", Seq(1f), "src_new")))))
   }
 
   test("staging reap spares a dir with fresh nested task output, deletes a truly stale one") {
