@@ -7,7 +7,7 @@ import java.nio.file.{Files, Path}
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.SparkSession
 
-import graft.config.{Configs, PipelineConfig}
+import graft.config.Configs
 
 /** F11 — the interactive dashboard (reference `app.py:96-200`), re-expressed
   * as a zero-dependency JDK `HttpServer` instead of Streamlit (a Python UI
@@ -26,7 +26,9 @@ import graft.config.{Configs, PipelineConfig}
   *
   * The config from the last successful run is the session handle, exactly
   * as `st.session_state["sink_config"/"embedder_config"]` holds it
-  * (`app.py:155-157`).
+  * (`app.py:155-157`); it is held inside the one `Engine.Searcher` built
+  * from it, so every search of a session reuses that searcher's sink
+  * snapshot.
   *
   * Scale note: the server is a thin control plane — every data-touching
   * step (run, search) is the same distributed `Pipeline.run` /
@@ -35,7 +37,7 @@ import graft.config.{Configs, PipelineConfig}
   */
 final class Dashboard(spark: SparkSession, workDir: Path, port: Int = 0) {
 
-  @volatile private var session: Option[PipelineConfig] = None
+  @volatile private var session: Option[Engine.Searcher] = None
 
   // /run serializes: concurrent runs share workDir/temp_pipeline.yaml (and
   // the sink/state paths), so an interleaved write->load could run the
@@ -117,7 +119,7 @@ final class Dashboard(spark: SparkSession, workDir: Path, port: Int = 0) {
           // Session handle set ONLY after a successful run (app.py:152-157:
           // session_state is assigned inside the success path) — a failed
           // run must leave /search refusing, not 500ing on a stale sink.
-          session = Some(cfg)
+          session = Some(Engine.Searcher(cfg))
           (200, "application/json",
             s"""{"config": ${jstr(cfgPath.toString)},
                | "documents_loaded": ${report.documentsLoaded},
@@ -132,7 +134,7 @@ final class Dashboard(spark: SparkSession, workDir: Path, port: Int = 0) {
         case None =>
           (409, "application/json",
             """{"error": "Please run a pipeline first."}""") // app.py:198
-        case Some(cfg) =>
+        case Some(searcher) =>
           val q = param(ex, "q").getOrElse("")
           if (q.isEmpty) (400, "text/plain", "search needs q=")
           else {
@@ -141,7 +143,7 @@ final class Dashboard(spark: SparkSession, workDir: Path, port: Int = 0) {
               case Some(s) => s.toIntOption.filter(_ >= 1)
                 .getOrElse(return400("k must be a positive integer"))
             }
-            val rows = Engine.Searcher(cfg).search(spark, q, k).collect()
+            val rows = searcher.search(spark, q, k).collect()
             val items = rows.zipWithIndex.map { case (r, i) =>
               // score is NULL for zero-norm vectors (cosine contract) —
               // emit JSON null, never NPE on the unbox.

@@ -16,6 +16,13 @@ object Engine {
   /** Q3 — Searcher: embed the query on the driver, exact top-k over the
     * corpus (TakeOrderedAndProject — per-partition top-k + k-row merge,
     * no full sort at any corpus size). Returns (source, text, score).
+    *
+    * One Searcher holds one sink, so repeated searches share its snapshot
+    * ([[graft.sinks.VectorTableSink.read]]): while the table is unchanged a
+    * search costs one marker read plus the top-k job; the first search
+    * after an upsert lists the table and reads its schema again, and sees
+    * the upsert. A search planned before a concurrent upsert commits can
+    * still race it. Keep the instance across queries to keep the snapshot.
     */
   final case class Searcher(config: PipelineConfig) {
     private val embedder = Factory.embedder(config.embedder)
@@ -39,7 +46,8 @@ object Engine {
     * through [[Similarity.blockedTopKPerQuery]] — hyperplane-LSH banded
     * candidates with multiprobe ON for recall, identical re-rank tail —
     * so the evaluator never plans O(|Q|·|N|) at corpus scale. The route
-    * decision costs one columnar count over the sink table.
+    * decision costs one columnar count over the sink table. Like
+    * [[Searcher]], one instance reuses its sink's snapshot across calls.
     */
   final case class Evaluator(config: PipelineConfig) {
     private val embedder = Factory.embedder(config.embedder)

@@ -37,7 +37,11 @@ object Partitioning {
     * tail, not so many that they fight for executors"); queued arms run
     * as slots free, preserving submission order. `timeout` bounds the
     * whole batch so a wedged arm fails loudly instead of hanging the
-    * caller forever.
+    * caller forever: every job an arm starts carries one job tag (with
+    * interrupt-on-cancel), and on timeout the queued arms are dropped and
+    * the tagged jobs cancelled before the `TimeoutException` is rethrown,
+    * so a wedged arm stops holding executors. A job an arm starts after
+    * that cancel (it was still building its frame) is not cancelled.
     */
   def unionOverlapped(arms: Seq[() => DataFrame],
                       maxConcurrent: Int = 7,
@@ -45,16 +49,33 @@ object Partitioning {
                         scala.concurrent.duration.Duration(30, "min")): DataFrame = {
     require(arms.nonEmpty, "unionOverlapped: need at least one arm")
     require(maxConcurrent >= 1, "unionOverlapped: maxConcurrent must be >= 1")
-    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.{Await, ExecutionContext, Future, TimeoutException}
+    val sc = org.apache.spark.sql.SparkSession.active.sparkContext
+    val tag = s"$OverlappedJobTag-${java.util.UUID.randomUUID()}"
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.min(arms.size, maxConcurrent))
     try {
       implicit val ec: ExecutionContext =
         ExecutionContext.fromExecutorService(pool)
-      val done = arms.map(a => Future(a().localCheckpoint()))
-      Await.result(Future.sequence(done), timeout).reduce(_.union(_))
+      // Job tags are thread-local properties; the pool's threads live only
+      // for this call, so they need no cleanup.
+      val done = arms.map(a => Future {
+        sc.addJobTag(tag)
+        sc.setInterruptOnCancel(true)
+        a().localCheckpoint()
+      })
+      try Await.result(Future.sequence(done), timeout).reduce(_.union(_))
+      catch {
+        case e: TimeoutException =>
+          pool.shutdownNow()
+          sc.cancelJobsWithTag(tag)
+          throw e
+      }
     } finally pool.shutdown()
   }
+
+  /** Prefix of the job tag [[unionOverlapped]] puts on its arms' jobs. */
+  private[graft] val OverlappedJobTag = "graft-union-overlapped"
 
   /** Repartition `df` up to the cluster's default parallelism iff its
     * current plan yields fewer partitions; never coalesces.

@@ -1,5 +1,7 @@
 package graft.operators
 
+import java.nio.charset.StandardCharsets.UTF_8
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -39,6 +41,28 @@ object Sink {
   private val pathLocks = new java.util.concurrent.ConcurrentHashMap[String, Object]()
   private[graft] def lockFor(path: String): Object =
     pathLocks.computeIfAbsent(path, _ => new Object)
+
+  /** The table's version marker: a hidden file at the table root holding
+    * one random token per committed upsert. The leading `_` keeps it out of
+    * Spark's file listing and out of [[touchedRows]]' layout check.
+    */
+  private val VersionMarker = "_graft_version"
+
+  /** The version token of the table at `path`, or None when the marker is
+    * absent or unreadable: an upsert is in flight or failed, or the table
+    * was written before markers existed. Readers key a held snapshot on it
+    * ([[graft.sinks.VectorTableSink.read]]); a partly written marker is not
+    * a well-formed token and reads as None.
+    */
+  private[graft] def version(spark: SparkSession, path: String): Option[String] = {
+    val marker = new org.apache.hadoop.fs.Path(path, VersionMarker)
+    try {
+      val in = marker.getFileSystem(spark.sparkContext.hadoopConfiguration).open(marker)
+      val token = try new String(in.readAllBytes(), UTF_8) finally in.close()
+      Some(token).filter(t =>
+        scala.util.Try(java.util.UUID.fromString(t).toString == t).getOrElse(false))
+    } catch { case _: java.io.IOException => None }
+  }
 
   /** Reap leftover staging dirs from crashed writes: the UUID names make
     * them unidentifiable to their (dead) writer, so any
@@ -133,10 +157,20 @@ object Sink {
     * Schema: the existing schema is compared with the batch's modulo
     * nullability ([[graft.sinks.SinkSchemas.compatible]]); only a real type
     * or column change takes the full-table migration.
+    *
+    * Version: the table's marker ([[version]]) is deleted before anything
+    * is written and a fresh token is written after the commit — after the
+    * bucket overwrite, the cold write, or the migration's promote rename.
     */
   def upsertBySource(df: DataFrame, path: String, sourceCol: String = "source",
                      numBuckets: Int = DefaultBuckets): Unit = lockFor(path).synchronized {
     val spark = df.sparkSession
+    val marker = new org.apache.hadoop.fs.Path(path, VersionMarker)
+    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // Withdraw the version before anything is written and publish a new one
+    // only after the commit: a failed upsert leaves no marker, so no reader
+    // keeps serving a snapshot of files it may have replaced.
+    fs.delete(marker, false)
     reapStaleStaging(spark, path)
     // Pinned: the touched-bucket collect and the write must see the same
     // rows (a batch row in a bucket the survivors read never loaded would
@@ -158,6 +192,8 @@ object Sink {
           writeBuckets(withBucket.unionByName(survivors), path)
       }
     } finally if (owned) batch.unpersist()
+    val out = fs.create(marker, true)
+    try out.write(java.util.UUID.randomUUID().toString.getBytes(UTF_8)) finally out.close()
   }
 
   /** The existing rows of the buckets `withBucket` touches, read from
@@ -249,10 +285,6 @@ object Sink {
       if (!promoted) fs.delete(tmpP, true)
     }
   }
-
-  /** Read the sink table back. */
-  def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
 
   /** Compacting, clustering write — the 100 TB answer to the small-files
     * problem and its mirror image (one giant unsplittable file per task):

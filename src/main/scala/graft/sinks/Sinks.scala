@@ -26,6 +26,13 @@ import graft.operators.Sink
   */
 trait GraftSink {
   def write(df: DataFrame): Unit
+
+  /** The sink's rows as a lazy frame. A sink may return the same frame
+    * again while its table is unchanged ([[VectorTableSink.read]]); the
+    * frame then holds the file listing and schema of the version it was
+    * built from. A query planned from it before a concurrent write commits
+    * can still race that write, as a query over a fresh read can.
+    */
   def read(spark: SparkSession): DataFrame
   def testConnection(spark: SparkSession): Unit
 }
@@ -80,17 +87,44 @@ object SinkSchemas {
   * table's own files without a staging copy — and compares schemas modulo
   * nullability, so only a real type or column change takes the full-table
   * migration.
+  *
+  * A read is served from a snapshot while the table is unchanged: the sink
+  * holds the frame of its last read, keyed by the session and the table's
+  * version marker ([[Sink.version]]), which every upsert withdraws before
+  * writing and renews after its commit. A read of the same version in the
+  * same session costs one marker read and returns the held frame, whose
+  * resolved relation already holds the file listing and the parquet schema;
+  * any other read lists the table and infers its schema again. Only the
+  * listing and schema are held, never the rows. A table without a marker
+  * (written before markers existed, or after a failed upsert) is read fresh
+  * on every call. A query planned from a held frame before a concurrent
+  * upsert commits can still race it, as a query over a fresh read can.
   */
 final case class VectorTableSink(path: String, numBuckets: Int = Sink.DefaultBuckets)
     extends GraftSink {
+
+  /** (session, version, frame) of the last read made while the marker
+    * stayed put.
+    */
+  @volatile private var snapshot: Option[(SparkSession, String, DataFrame)] = None
 
   override def write(df: DataFrame): Unit = {
     SinkSchemas.validate(df.schema)
     Sink.upsertBySource(df, path, numBuckets = numBuckets)
   }
 
-  override def read(spark: SparkSession): DataFrame =
-    spark.read.parquet(path).drop("source_bucket")
+  override def read(spark: SparkSession): DataFrame = {
+    val version = Sink.version(spark, path)
+    snapshot match {
+      case Some((s, v, df)) if (s eq spark) && version.contains(v) => df
+      case _ =>
+        val df = spark.read.parquet(path).drop("source_bucket")
+        // Held only if no upsert began or committed during the read.
+        snapshot = version.filter(v => Sink.version(spark, path).contains(v))
+          .map(v => (spark, v, df))
+        df
+    }
+  }
 
   override def testConnection(spark: SparkSession): Unit = {
     // The reference probes `table_names()` (`sinks.py:95-100`); here:

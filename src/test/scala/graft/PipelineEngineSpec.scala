@@ -2,6 +2,9 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.config.Configs
@@ -84,6 +87,114 @@ class PipelineEngineSpec extends AnyFunSuite with SparkTestBase {
     assert(sparkHit.getAs[String]("source").endsWith("spark.txt"))
     val cookHit = s.search(spark, "tomato sauce garlic basil", 1).collect()(0)
     assert(cookHit.getAs[String]("source").endsWith("cooking.txt"))
+  }
+
+  /** The descriptions of the jobs the calling thread starts while `f`
+    * runs, seen by a listener. A tagged sentinel job follows `f`: the
+    * listener bus delivers events in order, so once the sentinel's start
+    * is seen, every job `f` started has been seen too.
+    */
+  private def jobsOf[T](f: => T): (T, Seq[String]) = {
+    val sc = spark.sparkContext
+    val tag = s"jobs-of-${java.util.UUID.randomUUID()}"
+    val sentinel = s"$tag-sentinel"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val tags = Option(e.properties).map(_.getProperty("spark.job.tags", "")).getOrElse("")
+          .split(",").toSet
+        if (tags(tag)) seen.add(Option(e.properties.getProperty("spark.job.description"))
+          .getOrElse(e.stageInfos.map(_.name).mkString(";")))
+        if (tags(sentinel)) drained.countDown()
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.addJobTag(tag)
+      val out = try f finally sc.removeJobTag(tag)
+      sc.addJobTag(sentinel)
+      try sc.parallelize(Seq(1), 1).count() finally sc.removeJobTag(sentinel)
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus did not drain")
+      (out, seen.asScala.toSeq)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("one Searcher sees each upsert: bucket overwrite, then schema migration") {
+    import spark.implicits._
+    val (_, data, cfg) = setup()
+    Pipeline.run(spark, cfg)
+    val s = Engine.Searcher(cfg)
+    def top(q: String) = s.search(spark, q, 1).collect()(0)
+    assert(top("tomato sauce garlic basil").getAs[String]("source").endsWith("cooking.txt"))
+    assert(top("tomato sauce garlic basil").getAs[String]("source").endsWith("cooking.txt"))
+
+    // Bucket overwrite: the re-run rewrites only the edited source's bucket.
+    Files.writeString(data.resolve("cooking.txt"), "Saffron risotto with zucchini and parmesan.")
+    assert(Pipeline.run(spark, cfg).documentsChanged == 1)
+    val fresh = top("saffron risotto zucchini parmesan")
+    assert(fresh.getAs[String]("source").endsWith("cooking.txt"))
+    assert(fresh.getAs[String]("text").contains("Saffron risotto"))
+
+    // Schema migration: a batch with an extra column rewrites the table.
+    val text = "lattice chromodynamics quark gluon plasma"
+    val vec = Factory.embedder(cfg.embedder).embedQuery(text)
+    Factory.sink(cfg.sink).write(Seq(("q-1", text, vec.toSeq, "physics.txt", "en"))
+      .toDF("id", "text", "vector", "source", "lang"))
+    assert(Factory.sink(cfg.sink).read(spark).columns.contains("lang"), "the write did not migrate")
+    val migrated = top(text)
+    assert(migrated.getAs[String]("source") == "physics.txt")
+    assert(top("distributed analytics engine spark").getAs[String]("source").endsWith("spark.txt"))
+  }
+
+  test("a warm search runs one job; the first search after an upsert lists and reads footers again") {
+    import spark.implicits._
+    val root = tempDir("graft-warm")
+    val cfg = Configs.parse(
+      s"""source:
+         |  type: local_files
+         |  config: {directory: ${root.resolve("unused").toString}}
+         |chunker:
+         |  type: recursive_character
+         |  config: {chunk_size: 80, chunk_overlap: 10}
+         |embedder:
+         |  type: hashing
+         |  config: {dim: 1024}
+         |sink:
+         |  type: table
+         |  config: {uri: ${root.resolve("sink").toString}}
+         |state_manager:
+         |  type: memory
+         |""".stripMargin)
+    val embedder = Factory.embedder(cfg.embedder)
+    def batch(sources: Range, version: String) = sources.map { i =>
+      val text = s"$version alpha$i beta$i gamma$i"
+      (s"$version-$i", text, embedder.embedQuery(text).toSeq, s"src_$i")
+    }.toDF("id", "text", "vector", "source")
+    // 600 sources fill all 64 buckets: more bucket directories than the
+    // session's parallel-discovery threshold (32), so a fresh read lists
+    // them with a job.
+    val writer = Factory.sink(cfg.sink)
+    writer.write(batch(0 until 600, "v1"))
+    val s = Engine.Searcher(cfg)
+    def search(q: String) = jobsOf(s.search(spark, q, 1).collect()(0).getAs[String]("source"))
+
+    val (first, cold) = search("v1 alpha5 beta5 gamma5")
+    assert(first == "src_5")
+    assert(cold.size == 3, s"a first search lists, reads a footer and runs the top-k: $cold")
+    assert(cold.exists(_.startsWith("Listing leaf files")), cold)
+    for (i <- Seq(7, 8)) {
+      val (hit, warm) = search(s"v1 alpha$i beta$i gamma$i")
+      assert(hit == s"src_$i")
+      assert(warm.size == 1, s"a warm search runs the top-k alone: $warm")
+    }
+
+    writer.write(batch(40 until 41, "v2"))
+    val (fresh, miss) = search("v2 alpha40 beta40 gamma40")
+    assert(fresh == "src_40")
+    assert(miss.size == cold.size && miss.exists(_.startsWith("Listing leaf files")),
+      s"the first search after an upsert must read the table again: $miss")
+    assert(search("v2 alpha40 beta40 gamma40")._2.size == 1)
   }
 
   test("evaluator computes hit-rate over a JSONL dataset (evaluation.py:66-109)") {

@@ -259,4 +259,43 @@ class ScaleOpsSpec extends AnyFunSuite with SparkTestBase {
     assert(maxSeen.get() <= 2, s"cap violated: ${maxSeen.get()} arms in flight")
     assert(maxSeen.get() >= 2, "arms never overlapped — pool not concurrent")
   }
+
+  test("unionOverlapped cancels its arms' jobs when it times out") {
+    import org.apache.spark.scheduler._
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.ConcurrentHashMap[Int, Boolean]() // job id -> ended
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val running = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.job.tags", "")
+            .contains(graft.operators.Partitioning.OverlappedJobTag))) {
+          e.stageIds.foreach(stages.add)
+          jobs.put(e.jobId, false)
+        }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        jobs.computeIfPresent(e.jobId, (_, _) => true)
+      override def onTaskStart(e: SparkListenerTaskStart): Unit =
+        if (stages.contains(e.stageId)) running.incrementAndGet()
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (stages.contains(e.stageId)) running.decrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      val sleepy = udf { (x: Long) => Thread.sleep(300000L); x }
+      val arms: Seq[() => org.apache.spark.sql.DataFrame] = Seq(
+        () => spark.range(1).select(sleepy(col("id")).as("id")),
+        () => spark.range(3).toDF("id"))
+      val t0 = System.nanoTime()
+      intercept[java.util.concurrent.TimeoutException](graft.operators.Partitioning
+        .unionOverlapped(arms, timeout = scala.concurrent.duration.Duration(2, "s")))
+      // Without the cancel the sleeping task would hold its core for 300 s.
+      val deadline = t0 + 60L * 1000 * 1000 * 1000
+      def settled = !jobs.isEmpty && !jobs.containsValue(false) && running.get() == 0
+      while (!settled && System.nanoTime() < deadline) Thread.sleep(50)
+      assert(!jobs.isEmpty, "no job carried the overlapped-arm tag")
+      assert(!jobs.containsValue(false), s"a tagged job is still active: $jobs")
+      assert(running.get() == 0, s"${running.get()} tagged tasks still running")
+    } finally sc.removeSparkListener(listener)
+  }
 }

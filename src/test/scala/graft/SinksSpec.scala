@@ -220,21 +220,90 @@ class SinksSpec extends AnyFunSuite with SparkTestBase {
     }.toSet)
   }
 
+  private def marker(dir: String) = java.nio.file.Paths.get(dir, "_graft_version")
+
   test("an unreadable existing sink fails the upsert instead of being taken for absent") {
     val dir = tempDir("graft-sink").resolve("corrupt").toString
     val sink = VectorTableSink(dir, numBuckets = 4)
     sink.write(frame((0 until 20).map(i => (s"t$i", Seq(i.toFloat), s"src_$i"))))
+    val held = sink.read(spark)
+    assert(sink.read(spark) eq held)
     val parts = java.nio.file.Files.walk(java.nio.file.Paths.get(dir)).iterator().asScala
       .filter(_.getFileName.toString.endsWith(".parquet")).toVector
+    val original = parts.map(p => p -> java.nio.file.Files.readAllBytes(p))
     parts.foreach(p => java.nio.file.Files.write(p, "not parquet".getBytes))
     intercept[Exception](sink.write(frame(Seq(("new", Seq(1f), "src_3")))))
     // Nothing was overwritten: every (corrupt) file is still in place.
     parts.foreach(p => assert(new String(java.nio.file.Files.readAllBytes(p)) == "not parquet", p))
+    // The failed upsert withdrew the version: with the files restored, the
+    // next read is fresh, not the snapshot held from before the failure.
+    assert(!java.nio.file.Files.exists(marker(dir)), "a failed upsert must leave no marker")
+    original.foreach { case (p, b) => java.nio.file.Files.write(p, b) }
+    val next = sink.read(spark)
+    assert(!(next eq held), "the read after a failed upsert was served from the old snapshot")
+    assert(!(sink.read(spark) eq next), "a table without a marker must be read fresh")
+    assert(next.count() == 20)
     // A path holding a table of another layout is not an empty sink either.
     val flat = tempDir("graft-sink").resolve("flat").toString
     frame(Seq(("old", Seq(1f), "src_old"))).write.parquet(flat)
     intercept[IllegalArgumentException](
       VectorTableSink(flat).write(frame(Seq(("new", Seq(1f), "src_new")))))
+  }
+
+  test("read serves one frame per table version; an upsert by another instance moves it") {
+    val dir = tempDir("graft-sink").resolve("snap").toString
+    val writer = VectorTableSink(dir)
+    val reader = VectorTableSink(dir)
+    writer.write(frame(Seq(("a1", Seq(1f, 0f), "src_a"), ("b1", Seq(0f, 1f), "src_b"))))
+    val held = reader.read(spark)
+    assert(reader.read(spark) eq held, "an unchanged table must be served from the snapshot")
+    val token = graft.operators.Sink.version(spark, dir)
+    assert(token.isDefined)
+
+    writer.write(frame(Seq(("a2", Seq(0.5f, 0.5f), "src_a"))))
+    assert(graft.operators.Sink.version(spark, dir).exists(t => !token.contains(t)))
+    val after = reader.read(spark)
+    assert(!(after eq held), "an upsert must end the snapshot")
+    assert(after.select("text", "source").as[(String, String)].collect().toSet ==
+      Set(("a2", "src_a"), ("b1", "src_b")))
+    assert(reader.read(spark) eq after)
+    // The collection sink delegates to the same snapshot.
+    val coll = CollectionSink(dir)
+    assert(coll.read(spark) eq coll.read(spark))
+  }
+
+  test("the version marker is invisible to spark.read.parquet and to the upsert's layout check") {
+    val dir = tempDir("graft-sink").resolve("hidden").toString
+    val sink = VectorTableSink(dir, numBuckets = 4)
+    sink.write(frame((0 until 8).map(i => (s"t$i", Seq(i.toFloat), s"src_$i"))))
+    val bytes = java.nio.file.Files.readAllBytes(marker(dir))
+    assert(bytes.length == 36, s"the marker must hold one uuid: ${bytes.length} bytes")
+    val plain = spark.read.parquet(dir)
+    assert(plain.count() == 8)
+    assert(plain.columns.toSet == Set("text", "vector", "source", "source_bucket"))
+    assert(!plain.inputFiles.exists(_.contains("_graft_version")), plain.inputFiles.toSeq)
+    // A second upsert lists the table root: the marker is not a foreign file.
+    sink.write(frame(Seq(("t0b", Seq(0f), "src_0"))))
+    assert(sink.read(spark).count() == 8)
+  }
+
+  test("a sink without a marker is read fresh on every call and returns its rows") {
+    val dir = tempDir("graft-sink").resolve("unmarked").toString
+    val sink = VectorTableSink(dir)
+    sink.write(frame(Seq(("a1", Seq(1f, 0f), "src_a"), ("b1", Seq(0f, 1f), "src_b"))))
+    // A table written before markers existed, or whose marker was deleted.
+    val held = sink.read(spark)
+    java.nio.file.Files.delete(marker(dir))
+    java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(dir, "._graft_version.crc"))
+    val reads = Seq.fill(3)(sink.read(spark))
+    assert(!(reads.head eq held) && reads.sliding(2).forall { case Seq(a, b) => !(a eq b) },
+      "a table without a marker was served from a snapshot")
+    reads.foreach(r => assert(r.select("text", "source").as[(String, String)].collect().toSet ==
+      Set(("a1", "src_a"), ("b1", "src_b"))))
+    // A malformed marker is no version either.
+    java.nio.file.Files.write(marker(dir), "not-a-token".getBytes)
+    assert(graft.operators.Sink.version(spark, dir).isEmpty)
+    assert(!(sink.read(spark) eq sink.read(spark)))
   }
 
   test("staging reap spares a dir with fresh nested task output, deletes a truly stale one") {
